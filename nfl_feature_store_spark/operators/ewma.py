@@ -8,7 +8,7 @@ memory, so no frame-bounded Spark window expresses it; the closed form
 ``sum(alpha*(1-alpha)^{-j} x_j) * (1-alpha)^k`` overflows float64 beyond a
 few thousand rows, so column algebra is out too.
 
-Execution strategy — ``mapInPandas`` over entity-clustered, entity-sorted
+Execution strategy — ``mapInArrow`` over entity-clustered, entity-sorted
 partitions, NOT per-group ``applyInPandas``: a grouped map pays ~10ms of
 Arrow/pandas fixed cost per GROUP (measured), which at 10^9 conversations is
 days of pure overhead. The partition-level kernel instead runs ONE cython
@@ -16,6 +16,11 @@ days of pure overhead. The partition-level kernel instead runs ONE cython
 conversation in the partition simultaneously — per-group cost collapses to
 pandas' grouped-cython path (~40x faster end-to-end on the sf0.1 bench:
 26s -> <2s for the full pipeline).
+
+Role: the production backfill computes EWMA inside the window kernel
+(operators/window_kernel.py). This operator is q28's implementation and the
+INDEPENDENT referee that kernel is pinned against (tests/test_window_kernel.py,
+perfbench's referee check), so it deliberately shares none of the kernel's code.
 
 Correctness requirement: every entity's rows must be complete within one
 partition and sorted by (entity, order_cols). Downstream of the window
@@ -35,14 +40,8 @@ Salted/split-stream merge identity (single-entity-stream case):
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 
 def with_ewma(
@@ -56,29 +55,21 @@ def with_ewma(
     presorted: bool = False,
     num_partitions: int | None = None,
     max_partition_rows: int | None = None,
-    transport: str = "arrow",
 ) -> DataFrame:
     """Attach ``ewma_{m}`` per metric: span-EWM of the lag-1 series per entity.
 
     ``max_partition_rows`` is an executor-side memory tripwire: the kernel
-    materializes one partition in pandas by design (see module docstring), so
-    a partition blown up by a pathologically hot entity should FAIL FAST with
+    materializes one partition by design (see module docstring), so a
+    partition blown up by a pathologically hot entity should FAIL FAST with
     guidance (route the hot entity through operators/salted.py salted_ewm, or
     raise num_partitions) rather than OOM the worker.
 
-    ``transport`` (round-4): ``"arrow"`` (default) runs the kernel via
-    ``mapInArrow`` — passthrough columns (the TEXT payload above all) stay
-    Arrow buffers end-to-end and only ``(entity, order, reset?, metrics)``
-    are converted to pandas for the grouped-cython EWM; the computed columns
-    are appended to the original RecordBatches positionally. ``"pandas"``
-    keeps the original ``mapInPandas`` kernel (every column converted to
-    Python objects both ways). Same math, same cython, identical results —
-    the 2-core stage probe measured the EWMA stage as 264s of the 395s
-    flagship with the pandas transport, dominated by string
-    materialization, and it is also the pipeline's heaviest memory-bandwidth
-    consumer (the stage that collapses first under membw co-tenancy)."""
-    if transport not in ("arrow", "pandas"):
-        raise ValueError(f"transport must be 'arrow' or 'pandas', got {transport!r}")
+    Passthrough columns (the TEXT payload above all) stay Arrow buffers
+    end-to-end: only ``(entity, order, reset?, metrics)`` are converted to
+    pandas for the grouped-cython EWM, and the computed columns are appended
+    to the original RecordBatches positionally. Converting every column to
+    Python objects instead (the deleted full-row pandas kernel) spent 264s
+    of a 395s 2-core flagship on string materialization."""
     if len(set(metrics)) != len(metrics):
         raise ValueError(f"with_ewma metrics contains duplicates: {metrics}")
     overlap = set(metrics) & ({entity_col} | ({reset_col} if reset_col else set()))
@@ -94,47 +85,11 @@ def with_ewma(
     order = list(order_cols)
     group_keys = [entity_col] + ([reset_col] if reset_col else [])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # partition is the memory unit by design; the tripwire fires WHILE
-        # draining the Arrow iterator, before the concat doubles peak memory
-        chunks: list[pd.DataFrame] = []
-        total = 0
-        for b in batches:
-            total += len(b)
-            if max_partition_rows is not None and total > max_partition_rows:
-                raise ValueError(
-                    f"with_ewma partition holds > max_partition_rows="
-                    f"{max_partition_rows} rows; a hot entity this size belongs in "
-                    "operators.salted.salted_ewm, or raise num_partitions"
-                )
-            chunks.append(b)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if not presorted:
-            pdf = pdf.sort_values([entity_col] + order, kind="mergesort", ignore_index=True)
-        if not isinstance(pdf.index, pd.RangeIndex):
-            pdf = pdf.reset_index(drop=True)
-        g = pdf.groupby(group_keys, sort=False, dropna=False)
-        # ONE grouped shift + ONE grouped-cython EWM over ALL metrics at
-        # once (round-4 VERDICT item 6): the old per-metric loop paid the
-        # groupby/ewm dispatch 59x at reference width — the frame-level
-        # call is bitwise identical (pinned by the transport-parity tests
-        # vs the q28 oracle) and measured 1.66x faster at 59 metrics
-        shifted = g[list(metrics)].shift(1).astype("float64")
-        ewm = (
-            shifted.groupby([pdf[k] for k in group_keys], sort=False, dropna=False)
-            .ewm(span=span, adjust=False)
-            .mean()
-        )
-        ewm.index = ewm.index.get_level_values(-1)
-        for m in metrics:
-            pdf[f"{prefix}{m}"] = ewm[m]  # aligns on the original row index
-        yield pdf
-
-    def arrow_kernel(batches):
+    def kernel(batches):
         import pyarrow as pa
 
+        # partition is the memory unit by design; the tripwire fires WHILE
+        # draining the Arrow iterator, before the concat doubles peak memory
         blist = []
         total = 0
         for b in batches:
@@ -162,8 +117,11 @@ def with_ewma(
             else sub.sort_values(group_keys + order, kind="mergesort")
         )
         g = spdf.groupby(group_keys, sort=False, dropna=False)
-        # frame-at-once grouped shift + EWM (see pandas kernel note): one
-        # cython dispatch for all metrics instead of one per metric
+        # ONE grouped shift + ONE grouped-cython EWM over ALL metrics at
+        # once (round-4 VERDICT item 6): a per-metric loop pays the
+        # groupby/ewm dispatch 59x at reference width — the frame-level
+        # call is bitwise identical (q28 oracle) and measured 1.66x faster
+        # at 59 metrics
         shifted = g[list(metrics)].shift(1).astype("float64")
         ewm = (
             shifted.groupby([spdf[k] for k in group_keys], sort=False, dropna=False)
@@ -175,10 +133,9 @@ def with_ewma(
         for m in metrics:
             # back to the partition's original positional order so the
             # appended column lines up with the untouched batches.
-            # from_pandas=True: leading-window NaNs become Arrow NULLs —
-            # matching the mapInPandas transport (a bare pa.array would
-            # keep them as float NaN VALUES, which Spark treats as NaN,
-            # not NULL)
+            # from_pandas=True: leading-window NaNs become Arrow NULLs (a
+            # bare pa.array would keep them as float NaN VALUES, which
+            # Spark treats as NaN, not NULL)
             col = ewm[m].reindex(range(len(sub))).to_numpy()
             out = out.append_column(
                 f"{prefix}{m}", pa.array(col, type=pa.float64(), from_pandas=True)
@@ -190,175 +147,4 @@ def with_ewma(
     else:
         n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         clustered = df.repartition(int(n), entity_col).sortWithinPartitions(entity_col, *order)
-    if transport == "pandas":
-        return clustered.mapInPandas(kernel, schema=out_schema)
-    return clustered.mapInArrow(arrow_kernel, schema=out_schema)
-
-
-def with_ewma_jvm(
-    df: DataFrame,
-    metrics: tuple[str, ...] = ("chars", "words", "is_tool"),
-    span: int = 10,
-    entity_col: str = "conv_id",
-    order_cols: tuple[str, ...] = ("ts", "turn_idx"),
-    prefix: str = "ewma_",
-    chunk_rows: int | None = None,
-) -> DataFrame:
-    """JVM-only EWMA: same semantics as :func:`with_ewma` (span EWM,
-    adjust=False, over the lag-1 series per entity) with NO Python in the
-    data path.
-
-    Why it exists: ``with_ewma``'s mapInPandas round-trips EVERY column
-    (text payload included) through Arrow -> pandas -> Arrow and requires
-    Python workers on every executor. This variant keeps the whole
-    computation in Tungsten rows via a segmented (chunked) closed-form scan
-    that is ONE window stack over the existing hash(entity) partitioning —
-    no new exchange, no side branch, no join (a first cut that grouped
-    per-chunk summaries and joined carries back re-executed the whole
-    upstream in a second plan branch; this formulation replaced it).
-
-    Measured honestly (local[8], 2.5M turns, warm plans): the pandas kernel
-    is still 15-25% faster end-to-end — cython ewm plus one Arrow copy beats
-    the extra (entity, chunk) sort + per-row marker lists this formulation
-    needs. And the gap WIDENS with metric count: at the reference's
-    59-metric width (sf0.1, local[32]) this engine measured ~5x slower than
-    the pandas kernel (~115s vs ~17-33s) — its cost is ~15 window
-    expressions PER METRIC per row, while the pandas kernel amortizes all
-    metrics over one Arrow round-trip and one grouped-cython pass. So the
-    pipeline DEFAULTS to the pandas kernel at every width; use this engine
-    only where Python workers are unavailable or prohibited, and prefer
-    narrow metric sets when you do:
-
-    1. Chunk each entity's stream into runs of ``chunk_rows`` rows. Within a
-       chunk, the zero-seeded partial EWM has the closed form
-       ``p_t = a * (1-a)^{u_t} * sum_j x_j * (1-a)^{-u_j}`` over the chunk's
-       non-null lagged values (u = within-chunk update index). The chunk
-       bound keeps ``(1-a)^{-u}`` below ~1e9, so the column algebra is
-       float64-stable — the reason the UNSEGMENTED closed form (module
-       docstring) is unusable.
-    2. The LAST row of each chunk carries that chunk's summary
-       ``(u_end, p_end)``. An expanding ``collect_list`` window over
-       ``when(is_chunk_end, summary)`` hands every row the list of ALL PRIOR
-       chunks' summaries (collect_list skips the nulls on non-end rows) —
-       ~turns/chunk_rows tiny structs per conversation.
-    3. Carry-in: the EWM update is affine, so prior summaries compose left
-       to right as ``carry <- (1-a)^{u_end} * carry + p_end`` via one
-       ``aggregate`` fold, seeded with the entity's first lagged value
-       (pandas' first-observation seeding: ``(1-a)x + ax = x``).
-    4. ``e_t = (1-a)^{u_t} * carry + p_t``, NULL until the entity's first
-       update (pandas' leading NaNs).
-
-    Per-row cost of steps 2-3 is O(chunks-so-far) ≈ turns/chunk_rows — ~10
-    structs for even a 1000-turn conversation. A degenerate hot entity
-    (10^7+ turns) would make the collected list itself large; route those
-    through operators/salted.py salted_ewm, as with every window family.
-
-    Float caveat: closed-form vs iterative summation differ in the last
-    ulps (~1e-12 relative; parity vs the pandas kernel is pytest-pinned at
-    rtol 1e-9). ``reset_col`` semantics are not offered here — use
-    :func:`with_ewma` for reference-style per-period reseeding.
-
-    Contract (same as salted_ewm): metric values must be NON-NULL — the
-    engine's turn metrics are non-null by construction. Pandas'
-    ``ignore_na=False`` renormalizes decay over gap WIDTHS on null-bearing
-    series, which is a different recursion; rather than silently diverging,
-    a mid-stream NULL fails the job at execution with guidance to use
-    :func:`with_ewma` (enforced via assert_true, zero extra jobs).
-    """
-    if span < 2:
-        # span=1 => alpha=1 => log(1-alpha) below is log(0): reject with the
-        # parameter named instead of a bare math-domain error (round-3
-        # advice). A span-1 EWM is the identity on the lagged series anyway.
-        raise ValueError(f"with_ewma_jvm requires span >= 2, got span={span}")
-    alpha = 2.0 / (span + 1.0)
-    # largest u with (1-alpha)^-u < 1e9: keeps every per-row term finite and
-    # the summed magnitudes within ~9 digits of each other
-    max_chunk = int(math.log(1e9) / -math.log(1.0 - alpha))
-    C = chunk_rows or max_chunk
-    if C > max_chunk:
-        raise ValueError(f"chunk_rows={C} overflows the closed form; max {max_chunk} for span={span}")
-    order = [F.col(c) for c in order_cols]
-    w_ent = Window.partitionBy(entity_col).orderBy(*order)
-    w_cum = w_ent.rowsBetween(Window.unboundedPreceding, 0)
-    w_prior = w_ent.rowsBetween(Window.unboundedPreceding, -1)
-
-    # decay powers as CONSTANT lookup arrays: u is an integer in [0, C], so
-    # element_at on a constant-folded literal array replaces every pow()
-    # call — the first cut spent ~15 pow()/row and measured 16x the pandas
-    # kernel's CPU; lookups + the arithmetic u below brought it back
-    dec = [(1.0 - alpha) ** i for i in range(C + 1)]
-    inv = [(1.0 - alpha) ** (-i) for i in range(C + 1)]
-    dec_arr = F.array(*[F.lit(v) for v in dec])
-    inv_arr = F.array(*[F.lit(v) for v in inv])
-
-    out = df.withColumn("__ewm_rn", F.row_number().over(w_ent))
-    out = out.withColumn("__ewm_ck", ((F.col("__ewm_rn") - 1) / F.lit(C)).cast("long"))
-    is_chunk_end = F.col("__ewm_rn") % C == 0
-    w_chunk = (
-        Window.partitionBy(entity_col, "__ewm_ck").orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-
-    # non-null contract => the lag is null exactly at rn=1, so the update
-    # counters are ARITHMETIC, not window aggregates:
-    #   within-chunk updates u = rn - ck*C - (1 if first chunk else 0)
-    #   entity updates so far = rn - 1 (NULL mask: rn > 1)
-    u = (
-        F.col("__ewm_rn")
-        - F.col("__ewm_ck") * C
-        - F.when(F.col("__ewm_ck") == 0, F.lit(1)).otherwise(F.lit(0))
-    ).cast("int")
-    out = out.withColumn("__ewm_u", u)
-    dcol = F.element_at(dec_arr, F.col("__ewm_u") + 1)
-
-    lag_cols: list[str] = []
-    for m in metrics:
-        out = out.withColumn(f"__x_{m}", F.lag(F.col(m)).over(w_ent).cast("double"))
-        lag_cols.append(f"__x_{m}")
-        # seed = the entity's first value = its first non-null lagged value
-        out = out.withColumn(f"__xf_{m}", F.first(F.col(m)).over(w_cum).cast("double"))
-        term = F.col(f"__x_{m}") * F.element_at(inv_arr, F.col("__ewm_u") + 1)
-        s = F.sum(term).over(w_chunk)  # null terms (rn=1) drop out of the sum
-        out = out.withColumn(f"__p_{m}", F.lit(alpha) * dcol * F.coalesce(s, F.lit(0.0)))
-
-    # ONE marker stream for all metrics (u is position-derived, shared):
-    # each chunk's last row carries (u_end, p_end per metric); every row
-    # collects the markers of all PRIOR chunks — empty for conversations
-    # shorter than chunk_rows, i.e. almost all of them
-    marker = F.when(
-        is_chunk_end,
-        F.struct(
-            F.col("__ewm_u").alias("u"),
-            *[F.col(f"__p_{m}").alias(f"p_{m}") for m in metrics],
-        ),
-    )
-    out = out.withColumn("__ewm_marks", F.collect_list(marker).over(w_prior))
-
-    def _carry(m: str) -> F.Column:
-        # pyspark counts lambda params to bind HOF variables, so the metric
-        # name must close over a factory, not ride a default argument
-        def _merge(acc, s):
-            return F.element_at(dec_arr, s["u"] + 1) * acc + s[f"p_{m}"]
-
-        return F.aggregate(F.col("__ewm_marks"), F.col(f"__xf_{m}"), _merge)
-
-    drop = ["__ewm_rn", "__ewm_ck", "__ewm_u", "__ewm_marks"]
-    for m in metrics:
-        e = dcol * _carry(m) + F.col(f"__p_{m}")
-        out = out.withColumn(f"{prefix}{m}", F.when(F.col("__ewm_rn") > 1, e))
-        drop += [f"__x_{m}", f"__xf_{m}", f"__p_{m}"]
-    # non-null contract (docstring): the lag is NULL only on each entity's
-    # first row; any other NULL means a null metric value upstream.
-    # assert_true is NULL on pass, throws on violation (salted.py pattern)
-    all_non_null = sum(
-        (F.col(c).isNotNull()).cast("int") for c in lag_cols
-    ) == len(metrics)
-    guard = F.assert_true(
-        (F.col("__ewm_rn") == 1) | all_non_null,
-        F.lit(
-            "with_ewma_jvm: NULL metric value mid-stream; this operator requires "
-            "non-null metrics (pandas gap renormalization differs) — use with_ewma"
-        ),
-    )
-    out = out.filter(guard.isNull())
-    return out.drop(*drop)
+    return clustered.mapInArrow(kernel, schema=out_schema)

@@ -7,34 +7,36 @@ per-function-per-row interpreted-processor cost. At the reference's
 190-metric event-store width that is ~950 window functions — measured 464
 CPU-seconds for a 100k-row sf0.1 backfill (~24 s wall on 32 cores), all
 fixed evaluator overhead, no spill. This kernel computes the identical
-features with NumPy shifted-array algebra plus one sequential scan inside
-the ``mapInArrow`` stage the pipeline ALREADY runs for EWMA — so wide specs
-cross the Python boundary once (and with a NARROWER input than before: the
-kernel input is base+metrics, where the old EWMA hop shipped base+metrics
-+950 window columns).
+features with NumPy shifted-array algebra plus one sequential scan, and
+the EWMA in the same pass, inside ONE ``mapInArrow`` stage — so every spec
+crosses the Python boundary once, with only base+metrics as input. It is
+the production path of ``plans/pipeline.backfill_features`` at every width;
+``compile_window_features`` + ``with_ewma`` remain as its referee.
 
 Bitwise contract: every output equals expression mode bit-for-bit — pinned
-by tests/test_window_kernel_parity.py via ``exceptAll`` on corpora with
-NULL metrics, multi-session entities and single-row entities. The
-implementation preserves Spark's exact accumulation semantics:
+by tests/test_window_kernel.py via ``exceptAll`` on corpora with NULL
+metrics, multi-session entities and single-row entities, and by randomized
+trials of the module-level all-valid helpers below against row-loop /
+where-masked references. The implementation preserves Spark's exact
+accumulation semantics:
 
 * sliding frames (form/roll) sum the valid values oldest-to-newest with
   first-valid initialization (no ``0.0 +`` seeding, so ``-0.0`` and NaN
   propagate exactly as Spark's SlidingWindowFunctionFrame does);
 * running sums/counts and the two-anchor session bases use one sequential
   pass with the same first-valid initialization;
-* EWMA reuses the exact pandas grouped-cython calls of
-  ``operators/ewma.with_ewma`` (q28-oracle-pinned).
+* EWMA replicates pandas' adjust=False recursion exactly (all-valid
+  step-batched path) or calls the same pandas grouped-cython EWM as
+  ``operators/ewma.with_ewma`` (q28-oracle-pinned) on null-bearing data.
 
-Known representational caveats, shared with the existing EWMA kernel's
-Arrow transport: a literal float NaN VALUE in a metric column is
-indistinguishable from NULL on the pandas EWM path (the engine's metrics
-are never literal NaN), and outputs render NaN as NULL
-(``from_pandas=True``), matching the mapInPandas transport convention.
+Known representational caveats, shared with ``with_ewma``: a literal float
+NaN VALUE in a metric column is indistinguishable from NULL on the pandas
+EWM path (the engine's metrics are never literal NaN), and outputs render
+NaN as NULL (``from_pandas=True``).
 
 Scale notes: the kernel is partition-at-a-time over the same
 hash(entity)-clustered, entity-sorted layout every window family already
-requires — no new exchange (plan-asserted in tests/test_wide_spec.py). Peak
+requires — no new exchange (plan-asserted in tests/test_window_kernel.py). Peak
 memory per task is rows_per_partition x (metrics x ~9) float64 columns; the
 ``max_partition_rows`` tripwire (same contract as with_ewma) fails fast
 with guidance instead of OOMing on a pathologically hot entity.
@@ -49,6 +51,81 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from nfl_feature_store_spark.operators.windows import FeatureSpec
+
+
+def sliding_avg_all_valid(X: np.ndarray, pos: np.ndarray, k: int) -> np.ndarray:
+    """Mean of the ``k`` strictly-prior rows of each row's entity, for a
+    partition whose ``X`` (rows x metrics) carries no NULLs.
+
+    Row i's frame rows are i-k..i-1 clipped to the entity, summed
+    oldest-to-newest. Full-frame rows (pos >= k+1) get exactly the unmasked
+    j-descending adds below — the same op sequence a where-masked chain
+    runs for them (adds onto 0.0, oldest term first). Rows with pos <= k
+    would pick up cross-entity garbage from the unmasked adds, so their
+    chains are recomputed exactly afterwards (copy-init at the oldest
+    in-entity term, then ascending adds — the op sequence the masked
+    copyto/add pair produces). Bitwise identity pinned by the randomized
+    masked-vs-repair trial in tests/test_window_kernel.py; the unmasked
+    adds run ~30% faster than where-masked ones (round-6 §1.7).
+    """
+    n, M = X.shape
+    acc = np.zeros((n, M), dtype=np.float64)
+    for j in range(k, 0, -1):  # frame iterates ascending row order
+        np.add(acc[j:], X[:-j], out=acc[j:])
+    b = np.nonzero((pos >= 1) & (pos <= k))[0]
+    if b.size:
+        accb = X[b - pos[b]].copy()
+        for d in range(1, k):
+            sel = pos[b] >= d + 1
+            rows = b[sel]
+            accb[sel] += X[rows - (pos[rows] - d)]
+        acc[b] = accb
+    cnt = np.minimum(pos, k)[:, None]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(cnt > 0, acc / cnt, np.nan)
+
+
+def ewma_stepbatch(L: np.ndarray, starts: np.ndarray, span: int) -> np.ndarray:
+    """pandas ``ewm(span, adjust=False).mean()`` per entity over the lag-1
+    matrix ``L`` (rows x metrics, NaN exactly at each entity's first row,
+    no other NaN); ``starts`` are the entities' first-row indices.
+
+    The recursion ``avg = ((1-a)*avg + a*x) / ((1-a)+a)`` with pandas'
+    equality skip (``avg == x`` keeps avg), seeded at the entity's first
+    lagged value. Batched by TURN POSITION, not by row (round-6: a per-row
+    loop paid ~7 numpy dispatches per row — 0.20s of a 1.6s partition at
+    width 190; this form pays them per position, max-entity-length
+    iterations total). Each entity's lane in AVG advances through exactly
+    the same update sequence as the row loop — same operands, same
+    elementwise ops — so results stay bitwise identical (pinned by the
+    parity suites and the randomized rowloop-vs-stepbatch trials in
+    tests/test_window_kernel.py). Exists because pandas' GROUPED ewm pays
+    ~10ms per (group x column) of window-bounds bookkeeping (measured 1.9s
+    of a 3s kernel at width 190).
+    """
+    n, M = L.shape
+    alpha = 2.0 / (span + 1.0)
+    om = 1.0 - alpha
+    den = om + alpha  # pandas divides by (old_wt + new_wt), not 1.0
+    lens = np.diff(np.append(starts, n))
+    maxlen = int(lens.max()) if n else 0
+    EW = np.empty((n, M), dtype=np.float64)
+    EW[starts] = np.nan  # pos==0 rows have no prior history
+    AVG = np.empty((len(starts), M), dtype=np.float64)
+    for p in range(1, maxlen):
+        act = lens > p
+        rows = starts[act] + p
+        x = L[rows]
+        if p == 1:
+            new_avg = x
+        else:
+            a_act = AVG[act]
+            upd = (om * a_act + alpha * x) / den
+            # pandas' adjust=False equality skip: avg == x keeps avg
+            new_avg = np.where(a_act == x, a_act, upd)
+        AVG[act] = new_avg
+        EW[rows] = new_avg
+    return EW
 
 
 def _family_names(spec: FeatureSpec) -> list[str]:
@@ -72,13 +149,15 @@ def window_features_ewma_kernel(
     spec: FeatureSpec = FeatureSpec(),
     ewma_span: int | None = 10,
     ewma_prefix: str = "ewma_",
-    presorted: bool = True,
-    num_partitions: int | None = None,
     max_partition_rows: int | None = None,
 ) -> DataFrame:
     """Attach every configured window family (and optionally ``ewma_{m}``)
     in ONE ``mapInArrow`` stage — output schema and values identical to
-    ``compile_window_features`` (+ ``with_ewma``)."""
+    ``compile_window_features`` (+ ``with_ewma``).
+
+    ``df`` must already be clustered by ``spec.entity_col`` and sorted
+    within partitions by (entity, order_cols) — what sessionize's window
+    stage leaves behind; the kernel adds no exchange or sort of its own."""
     metrics = list(spec.metrics)
     if len(set(metrics)) != len(metrics):
         raise ValueError(f"window kernel metrics contains duplicates: {metrics}")
@@ -119,7 +198,7 @@ def window_features_ewma_kernel(
                 raise ValueError(
                     f"window kernel partition holds > max_partition_rows="
                     f"{max_partition_rows} rows; a hot entity this size belongs in "
-                    "operators.salted, or raise num_partitions"
+                    "operators.salted, or raise spark.sql.shuffle.partitions"
                 )
             blist.append(b)
         if not blist:
@@ -130,10 +209,6 @@ def window_features_ewma_kernel(
 
         need = list(dict.fromkeys([entity_col] + order + ([session_col] if session_anchored else [])))
         sub = tbl.select(need).to_pandas()
-        if not presorted:
-            sort_idx = sub.sort_values([entity_col] + order, kind="mergesort").index.to_numpy()
-            tbl = tbl.take(pa.array(sort_idx))
-            sub = sub.iloc[sort_idx].reset_index(drop=True)
 
         # values as float64 with NaN at NULLs + the true Arrow null masks
         # (a NaN VALUE stays "valid" and poisons sums, exactly like Spark).
@@ -197,32 +272,7 @@ def window_features_ewma_kernel(
         # ---- sliding frames: oldest-to-newest chain with first-valid init
         def sliding_avg(k: int) -> np.ndarray:
             if all_valid:
-                # Row i's frame rows are i-k..i-1 clipped to the entity,
-                # summed oldest-to-newest. Full-frame rows (pos >= k+1) get
-                # exactly the unmasked j-descending adds below — the same op
-                # sequence the previous masked form ran for them (adds onto
-                # 0.0, oldest term first). Rows with pos <= k would pick up
-                # cross-entity garbage from the unmasked adds, so their
-                # chains are recomputed exactly afterwards (copy-init at the
-                # oldest in-entity term, then ascending adds — the op
-                # sequence the masked copyto/add pair produced). Bitwise
-                # identity pinned by the randomized masked-vs-repair trial
-                # in tests/test_window_kernel.py; the unmasked adds run
-                # ~30% faster than where-masked ones (round-6 §1.7).
-                acc = np.zeros((n, M), dtype=np.float64)
-                for j in range(k, 0, -1):  # frame iterates ascending row order
-                    np.add(acc[j:], X[:-j], out=acc[j:])
-                b = np.nonzero((pos >= 1) & (pos <= k))[0]
-                if b.size:
-                    accb = X[b - pos[b]].copy()
-                    for d in range(1, k):
-                        sel = pos[b] >= d + 1
-                        rows = b[sel]
-                        accb[sel] += X[rows - (pos[rows] - d)]
-                    acc[b] = accb
-                cnt = np.minimum(pos, k)[:, None]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    return np.where(cnt > 0, acc / cnt, np.nan)
+                return sliding_avg_all_valid(X, pos, k)
             acc = np.zeros((n, M), dtype=np.float64)
             init = np.zeros((n, M), dtype=bool)
             cnt = np.zeros((n, M), dtype=np.int64)
@@ -338,52 +388,14 @@ def window_features_ewma_kernel(
                         S = np.where(den > 0, num / den, np.nan)
                     emit("session_avg_{m}", S)
 
-        # ---- EWMA. Two transports, bit-identical (parity-pinned):
+        # ---- EWMA. Two paths, bit-identical (parity-pinned):
         #
-        # * all-valid fast path: pandas' adjust=False recursion replicated
-        #   as one numpy vector op per row over all metrics —
-        #   ``avg = ((1-a)*avg + a*x) / ((1-a)+a)`` with pandas' equality
-        #   skip (``avg == x`` keeps avg), seeded at the entity's first
-        #   valid lag. Verified bitwise equal to pandas ewm across
-        #   spans/trials incl. repeated values. Exists because pandas'
-        #   GROUPED ewm pays ~10ms per (group x column) of window-bounds
-        #   bookkeeping (measured 1.9s of a 3s kernel at width 190 — 89k
-        #   np.append calls inside get_window_bounds).
+        # * all-valid: ``ewma_stepbatch``, pandas' adjust=False recursion
+        #   replicated as numpy vector ops over all metrics;
         # * null-bearing (or literal-NaN) partitions: the original pandas
         #   grouped-cython call, whose NaN semantics are the contract.
         if ewma_span and all_valid and not np.isnan(X).any():
-            alpha = 2.0 / (ewma_span + 1.0)
-            om = 1.0 - alpha
-            den = om + alpha  # pandas divides by (old_wt + new_wt), not 1.0
-            # Batched by TURN POSITION, not by row (round-6: the per-row
-            # loop paid ~7 numpy dispatches per row — 0.20s of a 1.6s
-            # partition at width 190; this form pays them per position,
-            # max-entity-length iterations total). Each entity's lane in
-            # AVG advances through exactly the same update sequence as the
-            # row loop — same operands, same elementwise ops, so results
-            # stay bitwise identical (pinned by the parity suites and the
-            # randomized rowloop-vs-stepbatch trials in
-            # tests/test_window_kernel.py).
-            starts = np.nonzero(new_ent)[0]
-            lens = np.diff(np.append(starts, n))
-            maxlen = int(lens.max()) if n else 0
-            EW = np.empty((n, M), dtype=np.float64)
-            EW[starts] = np.nan  # pos==0 rows have no prior history
-            AVG = np.empty((len(starts), M), dtype=np.float64)
-            for p in range(1, maxlen):
-                act = lens > p
-                rows = starts[act] + p
-                x = L[rows]
-                if p == 1:
-                    new_avg = x
-                else:
-                    a_act = AVG[act]
-                    upd = (om * a_act + alpha * x) / den
-                    # pandas' adjust=False equality skip: avg == x keeps avg
-                    new_avg = np.where(a_act == x, a_act, upd)
-                AVG[act] = new_avg
-                EW[rows] = new_avg
-            emit(ewma_prefix + "{m}", EW)
+            emit(ewma_prefix + "{m}", ewma_stepbatch(L, np.nonzero(new_ent)[0], ewma_span))
         elif ewma_span:
             codes = np.cumsum(new_ent)
             gkey = pd.Series(codes)
@@ -393,16 +405,10 @@ def window_features_ewma_kernel(
                 .ewm(span=ewma_span, adjust=False)
                 .mean()
             )
-            ewm.index = ewm.index.get_level_values(-1)
-            idx = ewm.index.to_numpy()
-            if len(idx) == n and (idx == np.arange(n)).all():
-                # presorted input keeps groups in row order, so the frame
-                # already aligns positionally: one matrix extraction
-                # replaces M per-column reindex calls
-                emit(ewma_prefix + "{m}", ewm.to_numpy())
-            else:
-                for m in metrics:
-                    out[f"{ewma_prefix}{m}"] = ewm[m].reindex(range(n)).to_numpy()
+            # group codes ascend with the rows (entity-sorted input), so
+            # groupby(sort=False) keeps row order: the frame already aligns
+            # positionally
+            emit(ewma_prefix + "{m}", ewm.to_numpy())
 
         # ONE table construction: append_column per output column is
         # O(cols^2) metadata churn at 1000+ columns
@@ -413,9 +419,4 @@ def window_features_ewma_kernel(
         )
         yield from res.to_batches()
 
-    if presorted:
-        clustered = df
-    else:
-        n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        clustered = df.repartition(int(n), entity_col).sortWithinPartitions(entity_col, *order)
-    return clustered.mapInArrow(kernel, schema=out_schema)
+    return df.mapInArrow(kernel, schema=out_schema)

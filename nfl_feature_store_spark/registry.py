@@ -873,7 +873,7 @@ FROM s GROUP BY 1, 2
 
 def q28_ewma(spark: SparkSession, sf: str) -> DataFrame:
     """W5: span-10 adjust=False EWM of the lag-1 series per entity
-    (mapInPandas kernel — unbounded recursion, no ANSI window FRAME; oracled
+    (mapInArrow kernel — unbounded recursion, no ANSI window FRAME; oracled
     via a DuckDB recursive CTE that replays pandas' exact fp update)."""
     from nfl_feature_store_spark.operators.ewma import with_ewma
 
@@ -1728,9 +1728,11 @@ FROM fine f JOIN coarse c ON f.user_id = c.user_id AND f.fs <= c.ce AND c.cs <= 
 
 #: DuckDB fragment == operators/sampling.py _bucket1000 / shard hash:
 #: md5_number_lower(key || '#seed') is bit-identical to the engine's
-#: conv(reversed-hex) unsigned decimal (tests/test_portable_hash.py)
+#: conv(reversed-hex) unsigned decimal (tests/test_portable_hash.py).
+#: Parenthesised so a trailing ``::BIGINT`` casts the bucket, not ``mod``:
+#: ``x % 1000::BIGINT`` types HUGEINT, which pandas reads as DOUBLE
 def _duck_bucket(key_sql: str, seed: int, mod: int) -> str:
-    return f"md5_number_lower({key_sql} || '#' || '{seed}') % {mod}"
+    return f"(md5_number_lower({key_sql} || '#' || '{seed}') % {mod})"
 
 
 def q51_deterministic_sample(spark: SparkSession, sf: str) -> DataFrame:

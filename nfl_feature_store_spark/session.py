@@ -60,13 +60,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd halves shuffle bytes vs the lz4 default on text-heavy
         # transcript payloads (measured 1.97x: 6.62 vs 13.05 MB on the
-        # flagship, wall equal-or-faster — scripts/codec_ab.py, BENCH/
-        # BASELINE.md round-5). At cluster scale shuffle bytes are network
-        # traffic; override via extra_conf if a workload proves CPU-bound.
+        # flagship, wall equal-or-faster — BENCH/BASELINE.md "Shuffle codec
+        # A/B"). At cluster scale shuffle bytes are network traffic;
+        # override via extra_conf if a workload proves CPU-bound.
         .config("spark.io.compression.codec", "zstd")
         # parquet sinks likewise: 15% smaller than snappy on the flagship
-        # feature table at wall-neutral cost (scripts/parquet_codec_ab.py) —
-        # and synthetic low-entropy text understates the real-corpus gain
+        # feature table at wall-neutral cost (BENCH/BASELINE.md "Parquet
+        # storage codec") — and synthetic low-entropy text understates the
+        # real-corpus gain
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():

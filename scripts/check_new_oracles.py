@@ -1,6 +1,11 @@
-"""Local replica of the driver's Spark-vs-DuckDB comparison for the four
-newly-oracled queries (q30/q31/q40/q44) at sf0.01 — row count, column
-names, and 6-decimal value hash over name-sorted columns."""
+"""Strict Spark-vs-DuckDB oracle comparison at sf0.01 — row count, column
+names, and a value hash over name-sorted columns that rounds float columns
+to 6 decimals and renders every other column as text.
+
+    python scripts/check_new_oracles.py [QUERY ...]
+
+Checks the queries named on the command line (any list of registry names),
+or every oracled query when none are given."""
 
 from __future__ import annotations
 
@@ -17,7 +22,6 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
-CHECK = sys.argv[1:] or ["q30_minhash_dedup", "q31_simhash", "q40_simhash_pairs", "q44_winnow_fingerprints"]
 
 
 def value_hash(pdf) -> str:
@@ -43,7 +47,7 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     rc = 0
-    for name in CHECK:
+    for name in sys.argv[1:] or sorted(ORACLES):
         got = QUERIES[name](spark, SF).toPandas()
         exp = con.sql(ORACLES[name]).df()
         rows = len(got) == len(exp)

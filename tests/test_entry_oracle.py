@@ -1,6 +1,6 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 at sf0.01 and compare against oracle_sql() through DuckDB — row count, column
-names, and order-insensitive value equality."""
+names, integer-vs-float dtype kind, and order-insensitive value equality."""
 
 from __future__ import annotations
 
@@ -61,6 +61,16 @@ def test_query_matches_oracle(spark, duck, name):
         f"{name}: columns {sorted(got.columns)} vs {sorted(exp.columns)}"
     )
     assert len(got) == len(exp), f"{name}: rows {len(got)} vs {len(exp)}"
+    # the strict value hash (scripts/check_new_oracles.py) rounds float
+    # columns and renders the rest as text, so an integer column that one
+    # side types as float ("9" vs "9.0") fails there even when the .9g
+    # canonical keys below agree
+    mixed = {
+        c: (str(got[c].dtype), str(exp[c].dtype))
+        for c in got.columns
+        if (got[c].dtype.kind == "f") != (exp[c].dtype.kind == "f")
+    }
+    assert not mixed, f"{name}: float vs non-float dtype (spark, duck) {mixed}"
     g, e = _canon(got), _canon(exp)
     mism = (g["__key"] != e["__key"]).to_numpy().nonzero()[0]
     assert len(mism) == 0, (

@@ -1,10 +1,10 @@
-"""Cross-transport parity for the Arrow-batched scan operators (round-4 advice).
+"""Parity of the Arrow-batched scan operators against local referees.
 
-``with_ewma`` and ``elo_per_entity`` each offer two physical transports —
-``mapInArrow`` (default; passthrough columns stay Arrow buffers) and the
-original ``mapInPandas`` — with the docstring claim that results are
-identical, including leading-window NaN -> NULL conversion. These tests pin
-that claim: same values, same NULL mask, on data that exercises NULLs
+``with_ewma`` and ``elo_per_entity`` each run one ``mapInArrow`` kernel:
+passthrough columns stay Arrow buffers, the computed column is appended
+positionally and leading-window NaN renders as NULL. These tests pin that
+against a per-entity pandas/numpy computation outside Spark — same values
+(atol=0), same NULL mask, text untouched — on data that exercises NULLs
 (leading rows, NaN outcomes) and a metric name that collides with an order
 column (the duplicate-projection crash fixed by the dict.fromkeys dedupe).
 """
@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
+
+KEY = ["conv_id", "ts", "turn_idx"]
 
 
 def _fixture(seed: int = 41) -> pd.DataFrame:
@@ -39,15 +40,44 @@ def _fixture(seed: int = 41) -> pd.DataFrame:
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     pdf["chars"] = pdf["text"].str.len().astype("float64")
     pdf["outcome"] = rng.integers(0, 2, len(pdf)).astype("float64")
-    # NaN outcomes: the elo scan must SKIP these without updating the rating,
-    # identically under both transports
+    # NaN outcomes: the scans must carry them exactly (EWM decay over the
+    # gap; elo skips the update) — the referees below do the same
     pdf.loc[pdf.sample(frac=0.15, random_state=7).index, "outcome"] = np.nan
     return pdf
 
 
+def _sorted(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pdf.sort_values(KEY, kind="mergesort").reset_index(drop=True)
+
+
+def _ewma_referee(pdf: pd.DataFrame, metrics: tuple[str, ...]) -> pd.DataFrame:
+    """Per-entity ``shift(1).ewm(span=10, adjust=False)`` — one plain pandas
+    series per conversation, no grouped kernel."""
+    ref = _sorted(pdf)
+    for m in metrics:
+        ref[f"ewma_{m}"] = pd.concat(
+            [
+                s.shift(1).astype("float64").ewm(span=10, adjust=False).mean()
+                for _, s in ref.groupby("conv_id", sort=False)[m]
+            ]
+        )
+    return ref
+
+
+def _elo_referee(pdf: pd.DataFrame, outcome_col: str) -> pd.DataFrame:
+    """``elo._elo_scan`` run on each conversation's ordered outcomes."""
+    from nfl_feature_store_spark.operators.elo import DEFAULT_INIT, DEFAULT_K, _elo_scan
+
+    ref = _sorted(pdf)
+    ref["elo_pre"] = np.nan
+    for _, idx in ref.groupby("conv_id", sort=False).groups.items():
+        x = ref.loc[idx, outcome_col].to_numpy(dtype="float64")
+        ref.loc[idx, "elo_pre"] = _elo_scan(x, np.full(len(x), DEFAULT_INIT), DEFAULT_K, DEFAULT_INIT)
+    return ref
+
+
 def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame, cols: list[str]) -> None:
-    a = a.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
-    b = b.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
+    a, b = _sorted(a), _sorted(b)
     for c in cols:
         # identical NULL mask (leading-window NaN->NULL claim), then values
         assert (a[c].isna().values == b[c].isna().values).all(), f"{c}: NULL masks differ"
@@ -60,51 +90,34 @@ def _assert_frames_equal(a: pd.DataFrame, b: pd.DataFrame, cols: list[str]) -> N
 def test_ewma_transport_parity(spark):
     from nfl_feature_store_spark.operators.ewma import with_ewma
 
-    sdf = spark.createDataFrame(_fixture())
-    outs = {
-        t: with_ewma(sdf, metrics=("chars", "outcome"), transport=t).toPandas()
-        for t in ("arrow", "pandas")
-    }
-    assert list(outs["arrow"].columns) == list(outs["pandas"].columns)
-    _assert_frames_equal(outs["arrow"], outs["pandas"], ["ewma_chars", "ewma_outcome"])
-    # text payload rides through untouched on both transports
-    _ = {
-        t: o.sort_values(["conv_id", "ts", "turn_idx"]) for t, o in outs.items()
-    }
-    assert (
-        outs["arrow"].sort_values(["conv_id", "ts", "turn_idx"])["text"].values
-        == outs["pandas"].sort_values(["conv_id", "ts", "turn_idx"])["text"].values
-    ).all()
+    pdf = _fixture()
+    got = with_ewma(spark.createDataFrame(pdf), metrics=("chars", "outcome")).toPandas()
+    assert list(got.columns) == list(pdf.columns) + ["ewma_chars", "ewma_outcome"]
+    _assert_frames_equal(got, _ewma_referee(pdf, ("chars", "outcome")), ["ewma_chars", "ewma_outcome"])
+    # the text payload rides through the Arrow kernel untouched
+    assert (_sorted(got)["text"].values == _sorted(pdf)["text"].values).all()
 
 
 def test_elo_transport_parity(spark):
     from nfl_feature_store_spark.operators.elo import elo_per_entity
 
-    sdf = spark.createDataFrame(_fixture(seed=43))
-    outs = {
-        t: elo_per_entity(sdf, outcome_col="outcome", transport=t).toPandas()
-        for t in ("arrow", "pandas")
-    }
-    assert list(outs["arrow"].columns) == list(outs["pandas"].columns)
-    _assert_frames_equal(outs["arrow"], outs["pandas"], ["elo_pre"])
+    pdf = _fixture(seed=43)
+    got = elo_per_entity(spark.createDataFrame(pdf), outcome_col="outcome").toPandas()
+    assert list(got.columns) == list(pdf.columns) + ["elo_pre"]
+    _assert_frames_equal(got, _elo_referee(pdf, "outcome"), ["elo_pre"])
+    assert (_sorted(got)["text"].values == _sorted(pdf)["text"].values).all()
 
 
-@pytest.mark.parametrize("transport", ["arrow", "pandas"])
-def test_ewma_metric_coincides_with_order_col(spark, transport):
-    """A metric that is ALSO an order column must not crash the arrow
-    transport's projection (round-4 advice: duplicate names in
-    pa.Table.select made sub[m] a DataFrame)."""
+def test_ewma_metric_coincides_with_order_col(spark):
+    """A metric that is ALSO an order column must not crash the kernel's
+    projection (round-4 advice: duplicate names in pa.Table.select made
+    sub[m] a DataFrame)."""
     from nfl_feature_store_spark.operators.ewma import with_ewma
 
     pdf = _fixture(seed=47)
     sdf = spark.createDataFrame(pdf)
-    out = (
-        with_ewma(sdf, metrics=("turn_idx", "chars"), transport=transport)
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    ref = pdf.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
+    out = _sorted(with_ewma(sdf, metrics=("turn_idx", "chars")).toPandas())
+    ref = _sorted(pdf)
     exp = (
         ref.groupby("conv_id", sort=False)["turn_idx"]
         .apply(lambda s: s.shift(1).ewm(span=10, adjust=False).mean())
@@ -118,8 +131,7 @@ def test_ewma_metric_coincides_with_order_col(spark, transport):
     )
 
 
-@pytest.mark.parametrize("transport", ["arrow", "pandas"])
-def test_elo_outcome_coincides_with_order_col(spark, transport):
+def test_elo_outcome_coincides_with_order_col(spark):
     """Same dedupe guarantee for elo_per_entity: ordering by the outcome
     column itself (degenerate but legal) must not produce a duplicate
     projection."""
@@ -131,7 +143,6 @@ def test_elo_outcome_coincides_with_order_col(spark, transport):
         sdf,
         outcome_col="turn_idx",
         order_cols=("ts", "turn_idx"),
-        transport=transport,
     ).toPandas()
     assert out["elo_pre"].notna().all()
     assert len(out) == len(pdf)

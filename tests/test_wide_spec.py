@@ -91,7 +91,7 @@ def test_wide_spec_values_spot_checked(wide_input):
 
 
 def test_wide_spec_with_ewma_stays_one_exchange(wide_input):
-    """The full wide flagship shape — windows THEN the presorted mapInPandas
+    """The referee's wide shape — windows THEN the presorted mapInArrow
     EWMA over all 59 metrics — must add no exchange beyond the window
     stage's hash(conv_id)."""
     from nfl_feature_store_spark.operators.ewma import with_ewma

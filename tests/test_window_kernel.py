@@ -5,10 +5,12 @@ bitwise against the expression path it replaces for wide specs:
   on corpora with NULL metrics, negative/large-magnitude metrics,
   multi-session entities and single-row entities;
 * identical output schema and column order;
-* the kernel-mode pipeline keeps the single hash(conv_id) exchange
-  (mapInArrow over the presorted sessionize output — no re-partition);
-* backfill_features engine selection: expr below the metric threshold,
-  kernel at/above it, explicit overrides honored.
+* the pipeline keeps the single hash(conv_id) exchange (mapInArrow over
+  the entity-sorted sessionize output — no re-partition), at every width
+  and with or without EWMA;
+* the kernel's all-valid helpers (step-batched EWMA, unmasked sliding chain
+  with boundary repair) equal their row-loop / where-masked references
+  bitwise on randomized shapes.
 """
 
 from __future__ import annotations
@@ -21,12 +23,13 @@ from pyspark.sql import functions as F
 from nfl_feature_store_spark.functions.turn_metrics import dedup_latest, with_turn_metrics
 from nfl_feature_store_spark.operators.ewma import with_ewma
 from nfl_feature_store_spark.operators.sessionize import sessionize
-from nfl_feature_store_spark.operators.window_kernel import window_features_ewma_kernel
-from nfl_feature_store_spark.operators.windows import FeatureSpec, compile_window_features
-from nfl_feature_store_spark.plans.pipeline import (
-    WINDOW_KERNEL_MIN_METRICS,
-    backfill_features,
+from nfl_feature_store_spark.operators.window_kernel import (
+    ewma_stepbatch,
+    sliding_avg_all_valid,
+    window_features_ewma_kernel,
 )
+from nfl_feature_store_spark.operators.windows import FeatureSpec, compile_window_features
+from nfl_feature_store_spark.plans.pipeline import backfill_features
 
 
 @pytest.fixture(scope="module")
@@ -67,7 +70,7 @@ def _expr_path(df, spec, span):
 )
 def test_kernel_bitwise_parity(corpus, spec, span):
     old = _expr_path(corpus, spec, span)
-    new = window_features_ewma_kernel(corpus, spec, ewma_span=span, presorted=True)
+    new = window_features_ewma_kernel(corpus, spec, ewma_span=span)
     assert old.columns == new.columns
     assert old.schema == new.schema
     assert old.exceptAll(new).count() == 0
@@ -78,11 +81,16 @@ def test_kernel_bitwise_parity_all_valid(corpus):
     """Null-free metrics route through the kernel's all-valid fast paths
     (validity from Arrow null_count metadata, vectorized expanding/session,
     step-batched EWMA recursion) — pin those bitwise against expression
-    mode too. ``words``/``is_tool``/``signed`` carry no injected NULLs, so
-    every partition takes the fast path."""
+    mode too. ``words``/``is_tool``/``signed`` carry no NULLs, so every
+    partition takes the fast path — asserted first, so the test fails loudly
+    if the corpus ever stops exercising it."""
     spec = FeatureSpec(metrics=("words", "is_tool", "signed"))
+    nulls = corpus.select(
+        [F.count(F.when(F.col(m).isNull(), 1)).alias(m) for m in spec.metrics]
+    ).first()
+    assert nulls.asDict() == {m: 0 for m in spec.metrics}, nulls
     old = _expr_path(corpus, spec, 10)
-    new = window_features_ewma_kernel(corpus, spec, ewma_span=10, presorted=True)
+    new = window_features_ewma_kernel(corpus, spec, ewma_span=10)
     assert old.columns == new.columns
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
@@ -128,23 +136,7 @@ def test_ewma_stepbatch_matches_rowloop():
                 upd = (om * avg + alpha * x) / den
                 avg = np.where(avg == x, avg, upd)
             ref[t] = avg
-        # shipped: step-batched (mirrors window_kernel.py)
-        maxlen = int(lens.max())
-        EW = np.empty((n, M))
-        EW[starts] = np.nan
-        AVG = np.empty((len(starts), M))
-        for p in range(1, maxlen):
-            act = lens > p
-            rows = starts[act] + p
-            x = L[rows]
-            if p == 1:
-                new_avg = x
-            else:
-                a_act = AVG[act]
-                upd = (om * a_act + alpha * x) / den
-                new_avg = np.where(a_act == x, a_act, upd)
-            AVG[act] = new_avg
-            EW[rows] = new_avg
+        EW = ewma_stepbatch(L, starts, span)
         assert np.array_equal(ref, EW, equal_nan=True), (seed, span)
 
 
@@ -179,50 +171,38 @@ def test_sliding_unmasked_repair_matches_masked():
         with np.errstate(invalid="ignore", divide="ignore"):
             ref = np.where(cnt > 0, acc / cnt, np.nan)
 
-        # shipped: unmasked adds + boundary repair (mirrors window_kernel.py)
-        acc2 = np.zeros((n, M))
-        for j in range(k, 0, -1):
-            np.add(acc2[j:], X[:-j], out=acc2[j:])
-        b = np.nonzero((pos >= 1) & (pos <= k))[0]
-        if b.size:
-            accb = X[b - pos[b]].copy()
-            for d in range(1, k):
-                sel = pos[b] >= d + 1
-                rows = b[sel]
-                accb[sel] += X[rows - (pos[rows] - d)]
-            acc2[b] = accb
-        with np.errstate(invalid="ignore", divide="ignore"):
-            got = np.where(cnt > 0, acc2 / cnt, np.nan)
+        got = sliding_avg_all_valid(X, pos, k)
         assert np.array_equal(ref, got, equal_nan=True), (seed, k)
 
 
 def test_kernel_pipeline_single_exchange(spark):
     from nfl_feature_store_spark.sources.transcripts import gen_transcripts_distributed
 
-    metrics = ("chars", "words", "is_tool") + tuple(
-        f"m{i}" for i in range(WINDOW_KERNEL_MIN_METRICS)
-    )
+    metrics = ("chars", "words", "is_tool") + tuple(f"m{i}" for i in range(4))
     raw = gen_transcripts_distributed(spark, n_convs=200, avg_turns=6, seed=5, partitions=4)
     wide = raw.withColumns(
         {f"m{i}": (F.xxhash64("conv_id", F.lit(i)) % 100).cast("double")
-         for i in range(WINDOW_KERNEL_MIN_METRICS)}
+         for i in range(4)}
     )
     feats = backfill_features(wide, spec=FeatureSpec(metrics=metrics), rank_metric=None)
     plan = feats._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan  # kernel engine actually selected
+    assert "MapInArrow" in plan
     exchanges = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
     assert exchanges == ["conv_id"], exchanges
 
 
-def test_engine_selection_and_validation(corpus):
-    narrow = backfill_features(corpus, rank_metric=None, ewma_span=None)
-    assert "MapInArrow" not in narrow._jdf.queryExecution().executedPlan().toString()
-    forced = backfill_features(
-        corpus, rank_metric=None, ewma_span=None, window_engine="kernel"
-    )
-    assert "MapInArrow" in forced._jdf.queryExecution().executedPlan().toString()
-    with pytest.raises(ValueError, match="window_engine"):
-        backfill_features(corpus, window_engine="fast")
+def test_backfill_plan_and_validation(corpus):
+    """Without EWMA or rank the backfill still runs the window families in
+    the kernel, and adds no exchange to its input: the corpus fixture
+    already ends in a hash(conv_id) repartition, which dedup, sessionize and
+    the kernel all reuse."""
+    feats = backfill_features(corpus, rank_metric=None, ewma_span=None)
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    pattern = r"Exchange hashpartitioning\((\w+)"
+    exchanges = re.findall(pattern, plan)
+    assert exchanges == re.findall(pattern, corpus._jdf.queryExecution().executedPlan().toString())
+    assert set(exchanges) == {"conv_id"}, exchanges
     with pytest.raises(ValueError, match="duplicates"):
         window_features_ewma_kernel(corpus, FeatureSpec(metrics=("chars", "chars")))
     with pytest.raises(ValueError, match="overlap"):
@@ -232,5 +212,5 @@ def test_engine_selection_and_validation(corpus):
 def test_kernel_partition_tripwire(corpus):
     with pytest.raises(Exception, match="max_partition_rows"):
         window_features_ewma_kernel(
-            corpus, FeatureSpec(metrics=("chars",)), presorted=True, max_partition_rows=3
+            corpus, FeatureSpec(metrics=("chars",)), max_partition_rows=3
         ).write.format("noop").mode("overwrite").save()
